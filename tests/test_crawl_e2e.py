@@ -16,6 +16,22 @@ from tripwire_spark.sources.synth import (
 N_HOSTS, N_PAGES, N_LINKS = 12, 4, 3
 
 
+def _assert_admit_oracle(state):
+    """First-principles seen set: every candidate url of a round joins
+    the frontier exactly once, in the first round it was a candidate,
+    unless it already was a seed."""
+    fr = state.frontier.select("url", "round_added").collect()
+    assert len(fr) == len({r.url for r in fr})
+    seeds = {r.url for r in fr if r.round_added == 0}
+    first: dict[str, int] = {}
+    cands = state.decision_log.filter("round > 0 AND decision = 'candidate'")
+    for r in cands.select("round", "curl").collect():
+        first[r.curl] = min(r["round"], first.get(r.curl, r["round"]))
+    want = {u: rd for u, rd in first.items() if u not in seeds}
+    assert want, "fixture crawl admitted nothing"
+    assert {r.url: r.round_added for r in fr if r.round_added > 0} == want
+
+
 @pytest.fixture(scope="module")
 def fixture_tables(spark):
     pages = synth_pages(spark, N_HOSTS, N_PAGES, N_LINKS).persist()
@@ -164,9 +180,9 @@ def test_crawl_deterministic_across_runs(spark, fixture_tables):
 
 
 def test_crawl_fetch_join_strategies_identical(spark, fixture_tables):
-    """fetch_join='shuffle_hash' (the past-10^8-claimed switchover) and
-    the cogroup seen mode must both produce the exact broadcast+scan
-    frontier — the flags trade plan shape, never results."""
+    """fetch_join='shuffle_hash' (the past-10^8-claimed switchover) must
+    produce the exact broadcast frontier — the flag trades plan shape,
+    never results — and every run's frontier matches the admit oracle."""
     from tripwire_spark.operators.crawl import run_crawl
 
     pages, seeds, robots = fixture_tables
@@ -177,17 +193,15 @@ def test_crawl_fetch_join_strategies_identical(spark, fixture_tables):
             max_rounds=2, default_budget=2, **kw,
         )
         out = sorted(map(tuple, st.frontier.select("qid", "url", "status", "try").collect()))
+        _assert_admit_oracle(st)
         st.release()
         return out
 
-    base = rows()  # seen_mode='auto' resolves to cogroup at this scale
+    base = rows()
     assert rows(fetch_join="shuffle_hash") == base
-    assert rows(seen_mode="cogroup") == base
-    assert rows(seen_mode="scan") == base
-    # auto modes re-resolve per ROUND from zero-cost estimates (r5):
-    # threshold=1 flips seen to scan / fetch to shuffle_hash from round
-    # 2 on (round 1 has no prior-round numbers and takes the defaults)
-    assert rows(seen_mode="auto", seen_mode_threshold=1) == base
+    # fetch_join='auto' re-resolves per ROUND from the prior round's
+    # claimed count: threshold=1 flips to shuffle_hash from round 2 on
+    # (round 1 of a fresh crawl has no prior count and broadcasts)
     assert rows(fetch_join="auto", fetch_join_threshold=1) == base
     assert rows(fetch_join="auto") == base  # stays broadcast at this scale
 
@@ -372,27 +386,30 @@ def test_recrawl_schedule_estimator_and_plan(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_checkpoint_bucketed_cogroup_matches_scan(spark, fixture_tables, tmp_path):
+def test_checkpoint_bucketed_admit_matches_in_memory(spark, fixture_tables, tmp_path):
     """VERDICT r4 ask #2 end-to-end: a checkpointed crawl whose admit
-    runs in cogroup mode over the BUCKETED seen-sketch base (with round
-    deltas riding the candidate side) lands on the exact frontier of the
-    in-memory scan-mode crawl — with compact_every=2 so both a
-    delta-on-base round AND a post-compaction round are exercised."""
+    reads the BUCKETED seen-sketch base (with round deltas riding the
+    candidate side) lands on the exact frontier of the in-memory crawl
+    (unioned state, no deltas) — with compact_every=2 so both a
+    delta-on-base round AND a post-compaction round are exercised — and
+    both match the admit oracle."""
     from tripwire_spark.operators.crawl import run_crawl
 
     pages, seeds, robots = fixture_tables
     ref = run_crawl(
         spark, seeds, pages, robots, BLACKLIST_PATTERNS,
-        max_rounds=3, default_budget=2, seen_mode="scan",
+        max_rounds=3, default_budget=2,
     )
     ck = run_crawl(
         spark, seeds, pages, robots, BLACKLIST_PATTERNS,
-        max_rounds=3, default_budget=2, seen_mode="cogroup",
+        max_rounds=3, default_budget=2,
         checkpoint_dir=str(tmp_path / "ck_bk"), compact_every=2,
     )
     a = sorted(map(tuple, ref.frontier.select("qid", "url", "status", "try").collect()))
     b = sorted(map(tuple, ck.frontier.select("qid", "url", "status", "try").collect()))
     assert a == b
+    _assert_admit_oracle(ref)
+    _assert_admit_oracle(ck)
     ref.release()
 
 
@@ -415,6 +432,30 @@ def test_resume_rejects_geometry_mismatch(spark, fixture_tables, tmp_path):
         )
 
 
+def test_resume_fetch_auto_uses_last_claimed_count(
+    spark, fixture_tables, tmp_path, capsys, monkeypatch
+):
+    """On resume, fetch_join='auto' reads the last committed
+    round's claimed count, so a claim set over the threshold takes the
+    shuffled hash join in the FIRST resumed round instead of always
+    broadcasting it."""
+    from tripwire_spark.operators.crawl import run_crawl
+
+    pages, seeds, robots = fixture_tables
+    ck = str(tmp_path / "ck_auto")
+    kw = dict(default_budget=2, checkpoint_dir=ck, fetch_join="auto", fetch_join_threshold=1)
+    run_crawl(spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1, **kw)
+    monkeypatch.setenv("TRIPWIRE_CRAWL_EXPLAIN", "1")
+    capsys.readouterr()
+    st = run_crawl(spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=2, resume=True, **kw)
+    assert st.rounds_run == 2
+    out = capsys.readouterr().out
+    assert "==== round 1 parsed plan ====" not in out
+    plan = out.split("==== round 2 parsed plan ====", 1)[1].split("====", 1)[0]
+    # the fetch join is the plan's one Inner join (robots join LeftOuter)
+    assert "ShuffledHashJoin Inner" in plan and "BroadcastHashJoin Inner" not in plan, plan
+
+
 def test_validate_url_hash_contract(spark, fixture_tables):
     """ADVICE r4 #3: a pages table whose stored url_hash was computed
     with a different hash must FAIL FAST under validate_url_hash=True
@@ -433,6 +474,31 @@ def test_validate_url_hash_contract(spark, fixture_tables):
     with pytest.raises(ValueError, match="url_hash"):
         run_crawl(
             spark, seeds, bad, robots, BLACKLIST_PATTERNS,
+            max_rounds=1, default_budget=2, validate_url_hash=True,
+        )
+
+
+def test_validate_url_hash_checks_every_partition(spark, fixture_tables):
+    """The url_hash check covers the whole table, not a
+    prefix of the first partition read — a mis-hashed row behind 1000
+    correct ones in another partition still fails fast."""
+    from tripwire_spark.operators.crawl import run_crawl
+
+    pages, seeds, robots = fixture_tables
+    # parallelize slices in order: rows 0..999 (correct) land in the
+    # first partition, rows 1000..1999 (mis-hashed) in the second
+    rows = [(f"http://ok{i}.test/p0", i >= 1000) for i in range(2000)]
+    two = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), "url string, bad boolean"
+    ).select(
+        "url",
+        F.when(F.col("bad"), F.xxhash64("url", F.lit(7)))
+        .otherwise(F.xxhash64("url")).alias("url_hash"),
+    )
+    assert two.rdd.getNumPartitions() == 2
+    with pytest.raises(ValueError, match="url_hash"):
+        run_crawl(
+            spark, seeds, two, robots, BLACKLIST_PATTERNS,
             max_rounds=1, default_budget=2, validate_url_hash=True,
         )
 

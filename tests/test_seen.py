@@ -153,12 +153,21 @@ def test_cuckoo_incremental_matches_full_build(spark):
 # -- SeenState delta segments (O(new) per-round state) -------------------
 
 
-def _admit(svc, cands, state, mode="scan"):
+def _admit(svc, cands, state, next_seg=1, order_cols=()):
     from tripwire_spark.operators.seen import SeenState
 
-    out = svc.admit(cands, state, hash_col="url_hash", mode=mode).persist()
-    fresh, delta = SeenState.split(out, ["url", "url_hash"])
+    out = svc.admit(cands, state, "url_hash", list(order_cols), next_seg=next_seg).persist()
+    fresh, delta = SeenState.split(out, cands.columns)
     return fresh, delta
+
+
+def _oracle_fresh(cands, admitted, order_cols=()):
+    """First-principles admit: the first candidate row per hash in
+    ``order_cols`` order, minus every hash in ``admitted``."""
+    first = {}
+    for r in sorted(cands.collect(), key=lambda r: tuple(r[c] for c in order_cols)):
+        first.setdefault(r["url_hash"], r)
+    return sorted(tuple(r) for h, r in first.items() if h not in admitted)
 
 
 def test_seen_state_admit_emits_only_delta_segments(spark):
@@ -204,7 +213,7 @@ def test_seen_state_untouched_buckets_byte_identical(spark):
         .filter(svc.bucket_col(F.col("url_hash")).isin(0, 1))
         .persist()
     )
-    out = svc.admit(cands, state, hash_col="url_hash", mode="cogroup").persist()
+    out = svc.admit(cands, state, "url_hash", [], next_seg=1).persist()
     # the state side of the cogroup is pruned to touched buckets only
     assert "LeftSemi" in out._jdf.queryExecution().executedPlan().toString()
     _, delta = SeenState.split(out, ["url", "url_hash"])
@@ -216,30 +225,35 @@ def test_seen_state_untouched_buckets_byte_identical(spark):
     assert all(b in (0, 1) for (b, s) in set(after) - set(before))
 
 
-@pytest.mark.parametrize("mode", ["scan", "cogroup"])
-def test_seen_state_segmented_membership_and_compact(spark, mode):
-    """Multi-round segmented state is membership-exact, re-admitting seen
-    urls yields zero fresh, and compact() folds all segments into one per
-    bucket while preserving the exact hash set — in BOTH admit modes."""
+def test_seen_state_segmented_membership_and_compact(spark):
+    """Multi-round segmented state is membership-exact against the
+    first-principles oracle (first candidate per hash by the order
+    columns, minus everything admitted before), re-admitting seen urls
+    yields zero fresh, and compact() folds all segments into one per
+    bucket while preserving the exact hash set."""
     from tripwire_spark.operators.seen import SeenState
 
     svc = SeenState(n_buckets=4)
     state = svc.init(_urls(spark, 0, 1000), "url_hash").persist()
-    hwm = 1000  # ids 0..hwm-1 admitted so far
-    for start in (500, 1200, 1800):  # three overlapping rounds
-        cands = _urls(spark, start, 1000).persist()
-        fresh, delta = _admit(svc, cands, state, mode=mode)
-        # fresh = candidates minus everything admitted before (exact)
-        got = sorted(r.url for r in fresh.collect())
-        want = sorted(r.url for r in _urls(spark, hwm, start + 1000 - hwm).collect())
-        assert got == want
-        hwm = start + 1000
+    admitted = {r.url_hash for r in _urls(spark, 0, 1000).collect()}
+    for rnd, start in enumerate((500, 1200, 1800), start=1):  # overlapping rounds
+        # in-batch duplicates: the overlap's second copy sorts first by ord
+        cands = (
+            _urls(spark, start, 1000).withColumn("ord", F.lit(2))
+            .unionByName(_urls(spark, start + 600, 400).withColumn("ord", F.lit(1)))
+            .persist()
+        )
+        want = _oracle_fresh(cands, admitted, ["ord"])
+        fresh, delta = _admit(svc, cands, state, next_seg=rnd, order_cols=["ord"])
+        assert sorted(tuple(r) for r in fresh.collect()) == want
+        assert all(r.seg == rnd for r in delta.collect())
+        admitted |= {r.url_hash for r in cands.collect()}
         state = SeenState.advance(state, delta).persist()
     # after all rounds: total distinct = 0..2800
     total = sum(r.n_items for r in state.collect())
-    assert total == 2800
+    assert total == len(admitted) == 2800
     # re-admitting anything in range yields zero fresh
-    again, delta2 = _admit(svc, _urls(spark, 0, 2800), state, mode=mode)
+    again, delta2 = _admit(svc, _urls(spark, 0, 2800), state, next_seg=4)
     assert again.count() == 0
     assert delta2.count() == 0  # no fresh -> no delta segment at all
     # compact: one seg=0 row per bucket, same membership
@@ -247,52 +261,8 @@ def test_seen_state_segmented_membership_and_compact(spark, mode):
     rows = compacted.collect()
     assert len(rows) == len({r.bucket for r in rows}) and all(r.seg == 0 for r in rows)
     assert sum(r.n_items for r in rows) == 2800
-    again2, _ = _admit(svc, _urls(spark, 0, 2800), compacted, mode=mode)
+    again2, _ = _admit(svc, _urls(spark, 0, 2800), compacted, next_seg=5)
     assert again2.count() == 0
-
-
-def test_seen_state_scan_mode_state_bytes_never_shuffled(spark):
-    """VERDICT r3 #4 (the last O(total)-per-round term): in scan mode
-    the state's segment blobs must move ZERO hops — no Exchange anywhere
-    in the admit plan may output a ``hashes``/``bloom`` column.  (The
-    delta's hashes exist only downstream of the applyInPandas build,
-    after every exchange.)  The cogroup mode plan FAILS this check by
-    design — that asymmetry is what the mode switch buys."""
-    from tripwire_spark.operators.seen import SeenState
-
-    def exchange_outputs(df):
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        # formatted explain: numbered nodes, then per-node detail blocks
-        # "(n) Exchange ... Output [...]" — collect each Exchange block
-        blocks, cur = [], None
-        for line in plan.splitlines():
-            if line.startswith("(") and ")" in line:
-                name = line.split(")", 1)[1].strip()
-                cur = name if name.startswith("Exchange") else None
-            elif cur and line.strip().startswith("Input"):
-                blocks.append(line)
-        return blocks
-
-    svc = SeenState(n_buckets=8)
-    state = svc.init(_urls(spark, 0, 4000), "url_hash").persist()
-    cands = _urls(spark, 2000, 4000)
-    scan = svc.admit(cands, state, hash_col="url_hash", mode="scan")
-    for b in exchange_outputs(scan):
-        assert "hashes" not in b and "bloom" not in b, b
-    # the discriminating control: cogroup mode DOES exchange state blobs
-    cg = svc.admit(cands, state, hash_col="url_hash", mode="cogroup")
-    assert any("hashes" in b for b in exchange_outputs(cg))
-    # and scan mode's answer is exactly cogroup mode's answer
-    fresh_s, delta_s = _admit(svc, cands, state, mode="scan")
-    fresh_c, delta_c = _admit(svc, cands, state, mode="cogroup")
-    assert sorted(r.url for r in fresh_s.collect()) == sorted(
-        r.url for r in fresh_c.collect()
-    )
-    assert sorted((r.bucket, r.n_items) for r in delta_s.collect()) == sorted(
-        (r.bucket, r.n_items) for r in delta_c.collect()
-    )
 
 
 def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
@@ -313,10 +283,7 @@ def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
     tbl.commit(base_mem, {"round": 0})
     base = tbl.read_base()
     # one delta segment batch on top of the base (urls 3000..3999)
-    d_out = svc.admit(
-        _urls(spark, 3000, 1000), base, hash_col="url_hash", mode="cogroup",
-        next_seg=1,
-    ).persist()
+    d_out = svc.admit(_urls(spark, 3000, 1000), base, "url_hash", [], next_seg=1).persist()
     _, delta = SeenState.split(d_out, ["url", "url_hash"])
     tbl.commit_append(delta, {"round": 1})
     base, deltas = tbl.read_base(), tbl.read_deltas()
@@ -329,15 +296,11 @@ def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
     cands = _urls(spark, 2500, 2500).withColumn(
         "__ck", F.xxhash64("url", F.lit("salt"))
     )
-    out = svc.admit(
-        cands, base, hash_col="url_hash", mode="cogroup", next_seg=2,
-        delta_side=deltas,
-    ).persist()
+    out = svc.admit(cands, base, "url_hash", [], next_seg=2, delta_side=deltas).persist()
     fresh, delta2 = SeenState.split(out, ["url", "url_hash", "__ck"])
     # (a) answer == the plain cogroup over the unioned state
     ref_out = svc.admit(
-        cands, SeenState.advance(base, deltas), hash_col="url_hash",
-        mode="cogroup", next_seg=2,
+        cands, SeenState.advance(base, deltas), "url_hash", [], next_seg=2
     ).persist()
     ref_fresh, ref_delta = SeenState.split(ref_out, ["url", "url_hash", "__ck"])
     assert sorted((r["url"], r["__ck"]) for r in fresh.collect()) == sorted(
@@ -347,6 +310,8 @@ def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
         (r.bucket, r.n_items) for r in ref_delta.collect()
     )
     # and both equal first-principles: fresh = ids 4000..4999
+    admitted = {r.url_hash for r in _urls(spark, 0, 4000).collect()}
+    assert sorted(tuple(r) for r in fresh.collect()) == _oracle_fresh(cands, admitted)
     assert fresh.count() == 1000
     # (b) plan: the state IS read bucketed, and any Exchange carrying
     # segment blobs is the tagged candidate-side union (__seg_tag rides
@@ -385,27 +350,26 @@ def test_seen_compact_rejects_mixed_geometry(spark):
         a.compact(mixed).collect()
 
 
-def test_scan_mode_preserves_full_range_int64_columns(spark):
-    """Round-5 regression (real bug found in review): with >=1 hit row
-    in a batch, scan mode's null-padded tagged union float64-upcast the
+def test_admit_delta_side_preserves_full_range_int64_columns(spark):
+    """Round-5 regression (real bug found in review): null-padded
+    segment rows in the candidate-side exchange float64-upcast the
     candidates' OTHER int64 columns, silently rounding 64-bit hashes
     (D2 ck, discovery parent qids) past the 52-bit mantissa — 1491 of
     1500 companion hashes corrupted in the repro.  Zero-filled now;
-    this pins byte-exact survival and scan==cogroup on those columns."""
+    this pins byte-exact survival through the delta-side path, where
+    every touched bucket's batch mixes segment and candidate rows."""
     from tripwire_spark.operators.seen import SeenState
 
     svc = SeenState(n_buckets=8)
     with_ck = lambda df: df.withColumn("ck64", F.xxhash64("url", F.lit("ck")))  # noqa: E731
-    state = svc.init(_urls(spark, 0, 3000), "url_hash").persist()
-    cands = with_ck(_urls(spark, 2500, 2000))  # 500 hits, 1500 fresh
-    outs = {}
-    for mode in ("scan", "cogroup"):
-        out = svc.admit(cands, state, hash_col="url_hash", mode=mode, next_seg=1)
-        fresh, _ = SeenState.split(out, ["url", "url_hash", "ck64"])
-        bad = fresh.filter(
-            F.col("ck64") != F.xxhash64("url", F.lit("ck"))
-        ).count()
-        assert bad == 0, f"{mode}: {bad} corrupted 64-bit companion values"
-        outs[mode] = sorted((r["url"], r["ck64"]) for r in fresh.collect())
-        assert len(outs[mode]) == 1500
-    assert outs["scan"] == outs["cogroup"]
+    state = svc.init(_urls(spark, 0, 1500), "url_hash").persist()
+    deltas = svc.init(_urls(spark, 1500, 1500), "url_hash").withColumn("seg", F.lit(1)).persist()
+    cands = with_ck(_urls(spark, 2500, 2000))  # 500 hits (all in deltas), 1500 fresh
+    out = svc.admit(cands, state, "url_hash", [], next_seg=2, delta_side=deltas)
+    fresh, _ = SeenState.split(out, ["url", "url_hash", "ck64"])
+    bad = fresh.filter(F.col("ck64") != F.xxhash64("url", F.lit("ck"))).count()
+    assert bad == 0, f"{bad} corrupted 64-bit companion values"
+    admitted = {r.url_hash for r in _urls(spark, 0, 3000).collect()}
+    got = sorted(tuple(r) for r in fresh.collect())
+    assert got == _oracle_fresh(cands, admitted)
+    assert len(got) == 1500

@@ -58,18 +58,12 @@ def main() -> int:
     ap.add_argument("--budget", type=int, default=3)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--backpressure", action="store_true")
-    ap.add_argument("--seen-mode", default="auto",
-                    choices=["auto", "scan", "cogroup"],
-                    help="seen-state admit read strategy (auto re-resolves "
-                         "per round from zero-cost estimates)")
     ap.add_argument("--fetch-join", default="auto",
                     choices=["auto", "broadcast", "shuffle_hash"],
                     help="claimed->pages join strategy (auto: prior round's "
                          "claimed count vs threshold)")
-    ap.add_argument("--no-seen-bucketed", action="store_true",
-                    help="disable the bucketed seen-sketch snapshot layout")
     ap.add_argument("--validate-url-hash", action="store_true",
-                    help="sample-check a stored pages.url_hash column "
+                    help="check a stored pages.url_hash column "
                          "against the xxhash64(url) contract at startup")
     ap.add_argument("--trap-limit", type=int, default=None,
                     help="cap per-(host, URL-shape) discoveries at this count "
@@ -127,8 +121,7 @@ def main() -> int:
         max_rounds=args.rounds, default_budget=args.budget,
         checkpoint_dir=args.checkpoint_dir, resume=args.resume,
         backpressure=args.backpressure, trap_limit=args.trap_limit,
-        seen_mode=args.seen_mode, fetch_join=args.fetch_join,
-        seen_bucketed=not args.no_seen_bucketed,
+        fetch_join=args.fetch_join,
         validate_url_hash=args.validate_url_hash,
     )
     n = state.frontier.count()

@@ -51,6 +51,15 @@ def _positions(h1: np.ndarray, k: int, m: int) -> np.ndarray:
     return (pos % np.int64(m) + np.int64(m)) % np.int64(m)
 
 
+def _bloom_bits(hs: np.ndarray, k: int, m: int) -> bytes:
+    """The m-bit bloom array of ``hs`` (k double-hashed bits each)."""
+    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
+    if len(hs):
+        pos = _positions(hs, k, m).ravel()
+        np.bitwise_or.at(bits, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
+    return bits.tobytes()
+
+
 class BloomSeenSet:
     """Builder/prober/merger for the sharded bloom sketch table.
 
@@ -80,16 +89,11 @@ class BloomSeenSet:
 
         def make(key, pdf: pd.DataFrame):
             hs = pdf["h"].to_numpy(dtype=np.int64)
-            n = len(hs)
-            bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-            if n:
-                pos = _positions(hs, k, m).ravel()
-                np.bitwise_or.at(bits, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
             return pd.DataFrame(
                 {
                     "bucket": [int(key[0])],
-                    "bits": [bits.tobytes()],
-                    "n_items": [n],
+                    "bits": [_bloom_bits(hs, k, m)],
+                    "n_items": [len(hs)],
                     "m_bits": [m],
                     "k": [k],
                 }
@@ -114,17 +118,15 @@ class BloomSeenSet:
 
         def orr(key, new_pdf: pd.DataFrame, sk_pdf: pd.DataFrame):
             if len(sk_pdf):
-                bits = np.frombuffer(sk_pdf["bits"].iloc[0], dtype=np.uint8).copy()
                 m = int(sk_pdf["m_bits"].iloc[0])
                 k = int(sk_pdf["k"].iloc[0])
                 n = int(sk_pdf["n_items"].iloc[0])
             else:
                 m, k, n = m_default, k_default, 0
-                bits = np.zeros((m + 7) // 8, dtype=np.uint8)
             hs = new_pdf["h"].to_numpy(dtype=np.int64)
-            if len(hs):
-                pos = _positions(hs, k, m).ravel()
-                np.bitwise_or.at(bits, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
+            bits = np.frombuffer(_bloom_bits(hs, k, m), dtype=np.uint8)
+            if len(sk_pdf):
+                bits = bits | np.frombuffer(sk_pdf["bits"].iloc[0], dtype=np.uint8)
             return pd.DataFrame(
                 {
                     "bucket": [int(key[0])],
@@ -285,17 +287,10 @@ class SeenState:
     def bucket_col(self, hash_col):
         return F.pmod(hash_col, F.lit(self.n_buckets)).cast("int")
 
-    def _bloom_of(self, hs: np.ndarray) -> bytes:
-        bits = np.zeros((self.m_bits + 7) // 8, dtype=np.uint8)
-        if len(hs):
-            pos = _positions(hs, self.k, self.m_bits).ravel()
-            np.bitwise_or.at(bits, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
-        return bits.tobytes()
-
     def init(self, urls: DataFrame, hash_col: str = "url_hash") -> DataFrame:
         """Seed state from an initial url-hash set (e.g. the seeded
         frontier): one seg=0 row per bucket."""
-        k, m, mk_bloom = self.k, self.m_bits, self._bloom_of
+        k, m = self.k, self.m_bits
 
         def make(key, pdf: pd.DataFrame):
             hs = np.unique(pdf["h"].to_numpy(dtype=np.int64))
@@ -303,7 +298,7 @@ class SeenState:
                 {
                     "bucket": [int(key[0])],
                     "seg": [0],
-                    "bloom": [mk_bloom(hs)],
+                    "bloom": [_bloom_bits(hs, k, m)],
                     "hashes": [hs.tobytes()],
                     "n_items": [len(hs)],
                     "m_bits": [m],
@@ -318,72 +313,44 @@ class SeenState:
         self,
         candidates: DataFrame,
         state: DataFrame,
-        hash_col: str = "url_hash",
-        order_cols: list[str] | None = None,
-        mode: str = "scan",
-        next_seg: int | None = None,
+        hash_col: str,
+        order_cols: list[str],
+        next_seg: int,
         delta_side: DataFrame | None = None,
     ) -> DataFrame:
         """(candidates, state) -> mixed rows: kind=0 fresh candidates,
         kind=1 the NEW delta segment per touched bucket (one row, only
-        this round's fresh hashes — prior segments are NOT re-emitted).
-        Compose the next state with ``advance(state, delta)`` (in
-        memory) or an append-commit of the delta (snapshot table).
+        this round's fresh hashes, numbered ``next_seg`` — prior segments
+        are NOT re-emitted).  Compose the next state with
+        ``advance(state, delta)`` (in memory) or an append-commit of the
+        delta (snapshot table).  Pass the round number as ``next_seg``
+        from a crawl loop: monotonic ids are all advance/compact need.
 
-        ``mode="scan"`` (default — the scale-safe read side): the state
-        is ONLY SCANNED, never shuffled.  The candidates' per-bucket
-        sorted hash arrays are broadcast onto the state scan; each
-        segment probes the (tiny) array against its own sorted hashes
-        in place and emits just the HIT hashes (≤ O(new) rows), which
-        ride into the delta-build shuffle as tagged rows — the
-        membership filter, in-batch dedup, and segment build all happen
-        in the one applyInPandas pass, so scan mode costs ONE broadcast
-        (the probe arrays) plus TWO O(new) exchanges per round.  At
-        steady state every bucket is touched every round, so the old
-        cogroup shipped the ENTIRE state (~80 GB of hash arrays at
-        10^10 urls) through its exchange per round even though only
-        O(new) bytes were written; scan mode's exchanges carry O(new)
-        bytes end to end — the state's bytes move zero hops (asserted
-        by a plan test: no Exchange in the admit plan outputs a
-        ``hashes`` column).  The candidate-hash broadcast is O(new)
-        (~8 B/url); past ~10^8 new urls/round flip to ``mode="cogroup"``
-        (whose one wide exchange then beats a too-big broadcast — the
-        same threshold logic as the fetch join).
+        One cogroup by bucket.  The state side is pruned to TOUCHED
+        buckets first (broadcast semi-join on the candidates' distinct
+        bucket set): buckets with no candidates this round contribute
+        zero bytes to the shuffle and their stored rows flow to the next
+        snapshot untouched.  Each bucket task dedups its candidates,
+        checks them against every segment by ``searchsorted`` and builds
+        the delta segment plus its bloom, all in numpy.
 
-        ``mode="cogroup"``: the original single-cogroup pass.  The
-        state side is pruned to TOUCHED buckets before the cogroup
-        (broadcast semi-join on the candidates' distinct bucket set):
-        buckets with no candidates this round contribute zero bytes to
-        the shuffle and their stored rows flow to the next snapshot
-        untouched.
-
-        ``delta_side`` (cogroup mode only): recent delta SEGMENTS that
-        should ride the candidate-side exchange instead of the state
-        side.  This is the huge-state ∧ huge-delta answer: persist the
-        compacted state **bucketed on** ``bucket`` (snapshot tables with
+        ``delta_side``: delta SEGMENTS that ride the candidate-side
+        exchange instead of the state side.  Persist the compacted state
+        **bucketed on** ``bucket`` (snapshot tables with
         ``bucket_key="bucket"``) and pass it as ``state`` — a bucketed
         table scan satisfies the cogroup's clustering requirement, so
         the base state's bytes never enter an Exchange (plan-asserted
         in tests/test_seen.py) — then pass the (small, O(new x rounds-
         since-compaction)) un-bucketed delta segments here; they are
-        null-padded into the candidate frame and shuffled WITH the
-        candidates, and the per-bucket task probes base + deltas +
-        in-batch together.  Exchange bytes per round: O(candidates) +
-        O(deltas since compaction); state bytes moved: zero.  With
-        ``delta_side`` an explicit ``next_seg`` is REQUIRED (the base's
-        max(seg) alone would collide with delta segment ids).
-
-        ``next_seg``: segment id for this round's delta rows in scan
-        mode (pass the round number from a crawl loop — monotonic ids
-        are all advance/compact need).  Default derives max(seg)+1 from
-        a column-pruned state aggregate (no blob columns read).
+        padded to the candidate shape and shuffled WITH the candidates.
+        Exchange bytes per round: O(candidates) + O(deltas since
+        compaction); state bytes moved: zero.
 
         Dedup within the batch keeps the first row per ``hash_col`` in
         ``order_cols`` ascending order (pass a total order for
         determinism).  ``hash_col`` must be non-null (pandas float64
         upcast would corrupt 64-bit hashes).
         """
-        order_cols = order_cols or []
         k_d, m_d = self.k, self.m_bits
         cand_fields = [
             T.StructField(f.name, f.dataType, True) for f in candidates.schema.fields
@@ -402,46 +369,68 @@ class SeenState:
             ]
         )
         cand_cols = [f.name for f in cand_fields]
-        state_pad = ("bloom", "hashes", "n_items", "m_bits", "k")
-        out_cols = ["kind", "bucket", "seg", *cand_cols, *state_pad]
+        seg_cols = ["seg", "bloom", "hashes", "n_items", "m_bits", "k"]
+        out_cols = ["kind", "bucket", "seg", *cand_cols, *seg_cols[1:]]
+        next_seg = int(next_seg)
+        with_deltas = delta_side is not None
 
-        if mode == "scan":
-            if delta_side is not None:
-                # scan mode reads the state via a plain mapInPandas scan
-                # — no partitioning requirement, so deltas just union in
-                state = SeenState.advance(state, delta_side)
-            return self._admit_scan(
-                candidates, state, hash_col, order_cols, next_seg,
-                out_schema, cand_cols, state_pad, out_cols,
-            )
-        if mode != "cogroup":
-            raise ValueError(f"admit mode must be 'scan' or 'cogroup', got {mode!r}")
-        if delta_side is not None:
-            if next_seg is None:
-                raise ValueError("admit(delta_side=...) requires an explicit next_seg")
-            return self._admit_cogroup_delta(
-                candidates, state, delta_side, hash_col, order_cols, next_seg,
-                out_schema, cand_cols, state_pad, out_cols,
+        cand = candidates.withColumn("__bucket", self.bucket_col(F.col(hash_col)))
+        # Touched-bucket pruning: at most n_buckets distinct ints,
+        # broadcast; untouched state rows never enter the shuffle.
+        touched = cand.select(F.col("__bucket").alias("bucket")).distinct()
+        state_in = state.join(F.broadcast(touched), "bucket", "left_semi")
+        left = cand
+        if with_deltas:
+            null_seg = [
+                F.lit(None).cast(t).alias(c)
+                for c, t in zip(seg_cols, ("int", "binary", "binary", "long", "long", "int"))
+            ]
+            # EVERY integral candidate column is zero-filled (not NULL) on
+            # segment rows: one null in an int64 Arrow column makes pandas
+            # deliver the whole column as float64, corrupting the CANDIDATE
+            # values sharing it past the 52-bit mantissa — and candidate
+            # frames carry 64-bit hashes beyond hash_col (parent qids, D2
+            # ck hashes).  Segment rows' candidate fields are never read,
+            # so the fill value is free; non-integral types stay NULL.
+            _integral = ("long", "int", "integer", "short", "byte", "bigint", "smallint", "tinyint")
+            null_cand = [
+                F.lit(0).cast(f.dataType).alias(f.name)
+                if f.dataType.simpleString() in _integral
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in candidates.schema.fields
+            ]
+            left = cand.select(
+                "__bucket", F.lit(0).alias("__seg_tag"), *cand_cols, *null_seg
+            ).unionByName(
+                delta_side.select(
+                    F.col("bucket").alias("__bucket"), F.lit(1).alias("__seg_tag"),
+                    *null_cand, *seg_cols,
+                )
             )
 
-        def step(key, cand: pd.DataFrame, st: pd.DataFrame):
+        def step(key, lf: pd.DataFrame, st: pd.DataFrame):
             bucket = int(key[0])
-            segs: list[np.ndarray] = []
-            if len(st):
-                segs = [np.frombuffer(b, dtype=np.int64) for b in st["hashes"]]
-                m = int(st["m_bits"].iloc[0]); kk = int(st["k"].iloc[0])
-                next_seg = int(st["seg"].max()) + 1
+            segs = [np.frombuffer(b, dtype=np.int64) for b in st["hashes"]]
+            geom = st  # bloom geometry comes from the stored segments
+            if with_deltas:
+                is_seg = lf["__seg_tag"].to_numpy() == 1
+                dsegs = lf[is_seg]
+                segs += [np.frombuffer(b, dtype=np.int64) for b in dsegs["hashes"]]
+                if not len(st):
+                    geom = dsegs
+                lf = lf[~is_seg]
+            cand = lf.drop(columns=[c for c in lf.columns if c not in cand_cols])
+            if len(geom):
+                m, kk = int(geom["m_bits"].iloc[0]), int(geom["k"].iloc[0])
             else:
                 m, kk = m_d, k_d
-                next_seg = 0
-            cand = cand.drop(columns="__bucket")
             if len(cand):
                 if order_cols:
                     cand = cand.sort_values([hash_col, *order_cols], kind="mergesort")
                 cand = cand.drop_duplicates(subset=[hash_col], keep="first")
                 hs = cand[hash_col].to_numpy(dtype=np.int64)
                 seen = np.zeros(len(hs), dtype=bool)
-                for old in segs:  # each segment is sorted; <= max_segments of them
+                for old in segs:  # each segment is sorted
                     if len(old):
                         idx = np.clip(np.searchsorted(old, hs), 0, len(old) - 1)
                         seen |= old[idx] == hs
@@ -452,20 +441,16 @@ class SeenState:
                 fhs = np.empty(0, dtype=np.int64)
             fresh.insert(0, "kind", 0)
             fresh.insert(1, "bucket", bucket)
-            fresh.insert(2, "seg", None)
-            for c in state_pad:
+            for c in seg_cols:
                 fresh[c] = None
             if len(fhs) == 0:
                 return fresh[out_cols]
             # delta bloom covers ONLY this segment's hashes; segment
             # blooms OR together at compact() time (same m, same k).
-            delta_bloom = np.zeros((m + 7) // 8, dtype=np.uint8)
-            pos = _positions(fhs, kk, m).ravel()
-            np.bitwise_or.at(delta_bloom, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
             st_row = {c: [None] for c in cand_cols}
             st_row.update(
                 kind=[1], bucket=[bucket], seg=[next_seg],
-                bloom=[delta_bloom.tobytes()], hashes=[fhs.tobytes()],
+                bloom=[_bloom_bits(fhs, kk, m)], hashes=[fhs.tobytes()],
                 n_items=[len(fhs)], m_bits=[m], k=[kk],
             )
             with warnings.catch_warnings():
@@ -474,265 +459,11 @@ class SeenState:
                 out = pd.concat([fresh, pd.DataFrame(st_row)], ignore_index=True)
             return out[out_cols]
 
-        cand = candidates.withColumn("__bucket", self.bucket_col(F.col(hash_col)))
-        # Touched-bucket pruning: at most n_buckets distinct ints,
-        # broadcast; untouched state rows never enter the shuffle.
-        touched = cand.select(F.col("__bucket").alias("bucket")).distinct()
-        state_in = state.join(F.broadcast(touched), "bucket", "left_semi")
         return (
-            cand.groupBy("__bucket")
+            left.groupBy("__bucket")
             .cogroup(state_in.groupBy(F.col("bucket").alias("__bucket")))
             .applyInPandas(step, schema=out_schema)
         )
-
-    def _admit_cogroup_delta(
-        self,
-        candidates: DataFrame,
-        base: DataFrame,
-        delta_side: DataFrame,
-        hash_col: str,
-        order_cols: list[str],
-        next_seg: int,
-        out_schema,
-        cand_cols: list[str],
-        state_pad: tuple,
-        out_cols: list[str],
-    ) -> DataFrame:
-        """Cogroup admit over a bucketed BASE with candidate-side deltas
-        (see ``admit`` docstring).  The base is the cogroup's right side
-        (a bucketed table scan enters it exchange-free); the delta
-        segments are null-padded to the candidate shape and ride the
-        candidate-side exchange as ``__seg_tag=1`` rows — O(new x K)
-        bytes, never O(state)."""
-        k_d, m_d = self.k, self.m_bits
-        seg_cols = ["seg", *state_pad]  # seg, bloom, hashes, n_items, m_bits, k
-        cand = candidates.withColumn("__bucket", self.bucket_col(F.col(hash_col)))
-        null_seg = [
-            F.lit(None).cast(t).alias(c)
-            for c, t in zip(seg_cols, ("int", "binary", "binary", "long", "long", "int"))
-        ]
-        left_cand = cand.select(
-            "__bucket", F.lit(0).alias("__seg_tag"), *cand_cols, *null_seg
-        )
-        # EVERY integral candidate column is zero-filled (not NULL) on
-        # segment rows: one null in an int64 Arrow column makes pandas
-        # deliver the whole column as float64, corrupting the CANDIDATE
-        # values sharing it past the 52-bit mantissa — and candidate
-        # frames carry 64-bit hashes beyond hash_col (parent qids, D2
-        # ck hashes).  Segment rows' candidate fields are never read,
-        # so the fill value is free; non-integral types stay NULL.
-        _integral = ("long", "int", "integer", "short", "byte", "bigint", "smallint", "tinyint")
-        null_cand = [
-            F.lit(0).cast(f.dataType).alias(f.name)
-            if f.dataType.simpleString() in _integral
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in candidates.schema.fields
-        ]
-        left_seg = delta_side.select(
-            F.col("bucket").alias("__bucket"), F.lit(1).alias("__seg_tag"),
-            *null_cand, *seg_cols,
-        )
-        left = left_cand.unionByName(left_seg)
-        touched = cand.select(F.col("__bucket").alias("bucket")).distinct()
-        base_in = base.join(F.broadcast(touched), "bucket", "left_semi")
-
-        def step(key, lf: pd.DataFrame, st: pd.DataFrame):
-            bucket = int(key[0])
-            is_seg = lf["__seg_tag"].to_numpy() == 1
-            dsegs = lf[is_seg]
-            cand = lf[~is_seg].drop(columns=["__bucket", "__seg_tag", *seg_cols])
-            segs = [np.frombuffer(b, dtype=np.int64) for b in st["hashes"]]
-            segs += [np.frombuffer(b, dtype=np.int64) for b in dsegs["hashes"]]
-            if len(st):
-                m = int(st["m_bits"].iloc[0]); kk = int(st["k"].iloc[0])
-            elif len(dsegs):
-                m = int(dsegs["m_bits"].iloc[0]); kk = int(dsegs["k"].iloc[0])
-            else:
-                m, kk = m_d, k_d
-            if len(cand):
-                if order_cols:
-                    cand = cand.sort_values([hash_col, *order_cols], kind="mergesort")
-                cand = cand.drop_duplicates(subset=[hash_col], keep="first")
-                hs = cand[hash_col].to_numpy(dtype=np.int64)
-                seen = np.zeros(len(hs), dtype=bool)
-                for old in segs:
-                    if len(old):
-                        idx = np.clip(np.searchsorted(old, hs), 0, len(old) - 1)
-                        seen |= old[idx] == hs
-                fresh = cand[~seen].copy()
-                fhs = np.sort(hs[~seen])
-            else:
-                fresh = cand
-                fhs = np.empty(0, dtype=np.int64)
-            fresh.insert(0, "kind", 0)
-            fresh.insert(1, "bucket", bucket)
-            fresh.insert(2, "seg", None)
-            for c in state_pad:
-                fresh[c] = None
-            if len(fhs) == 0:
-                return fresh[out_cols]
-            delta_bloom = np.zeros((m + 7) // 8, dtype=np.uint8)
-            pos = _positions(fhs, kk, m).ravel()
-            np.bitwise_or.at(delta_bloom, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
-            st_row = {c: [None] for c in cand_cols}
-            st_row.update(
-                kind=[1], bucket=[bucket], seg=[int(next_seg)],
-                bloom=[delta_bloom.tobytes()], hashes=[fhs.tobytes()],
-                n_items=[len(fhs)], m_bits=[m], k=[kk],
-            )
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore", FutureWarning)
-                out = pd.concat([fresh, pd.DataFrame(st_row)], ignore_index=True)
-            return out[out_cols]
-
-        return (
-            left.groupBy("__bucket")
-            .cogroup(base_in.groupBy(F.col("bucket").alias("__bucket")))
-            .applyInPandas(step, schema=out_schema)
-        )
-
-    def _admit_scan(
-        self,
-        candidates: DataFrame,
-        state: DataFrame,
-        hash_col: str,
-        order_cols: list[str],
-        next_seg: int | None,
-        out_schema,
-        cand_cols: list[str],
-        state_pad: tuple,
-        out_cols: list[str],
-    ) -> DataFrame:
-        """Scan-side admit (see ``admit`` docstring): state bytes never
-        enter an exchange; every shuffle/broadcast is O(new)."""
-        k_d, m_d = self.k, self.m_bits
-        cand = candidates.withColumn("__bucket", self.bucket_col(F.col(hash_col)))
-        # Per-bucket sorted candidate hash arrays: one O(new) partial-agg
-        # shuffle (collect_set partials merge executor-side), then one
-        # broadcast of ≤ n_buckets rows / O(new) total bytes.
-        cand_sets = cand.groupBy("__bucket").agg(
-            F.sort_array(F.collect_set(F.col(hash_col))).alias("__probe")
-        )
-        # State-side membership probe IN PLACE: the broadcast hash join
-        # streams the state scan (bucket + hashes only — bloom bytes are
-        # column-pruned away); each segment binary-searches the probe
-        # array against its sorted hashes and emits only the hits.
-        probed = state.select(
-            F.col("bucket").alias("__bucket"), "hashes"
-        ).join(F.broadcast(cand_sets), "__bucket", "inner")
-
-        def probe(iters):
-            for pdf in iters:
-                hits: list[np.ndarray] = []
-                for blob, parr in zip(pdf["hashes"], pdf["__probe"]):
-                    seg = np.frombuffer(blob, dtype=np.int64)
-                    if len(seg) == 0 or len(parr) == 0:
-                        continue
-                    p = np.asarray(parr, dtype=np.int64)
-                    idx = np.clip(np.searchsorted(seg, p), 0, len(seg) - 1)
-                    hit = p[seg[idx] == p]
-                    if len(hit):
-                        hits.append(hit)
-                yield pd.DataFrame(
-                    {"h": np.concatenate(hits) if hits else np.empty(0, dtype=np.int64)}
-                )
-
-        seen_h = probed.mapInPandas(probe, schema="h long")
-        # The hit hashes (≤ O(new) rows) ride INTO the delta-build
-        # shuffle as null-padded tagged rows of the candidate shape —
-        # one unionByName, no broadcast barrier and no extra join: the
-        # membership filter happens inside the same applyInPandas pass
-        # that dedups and builds the delta segment.  (A broadcast
-        # anti-join here measured +14 s on the per-run serial constant
-        # of the sf0.1 scaling pair — each broadcast build is a driver
-        # barrier the 1-slot side pays in full.)
-        # Integral columns are ZERO-filled (not NULL) on hit rows: one
-        # null in an int64 Arrow column makes pandas deliver the whole
-        # column as float64, silently rounding the CANDIDATE rows'
-        # 64-bit values (parent qids, D2 ck hashes) past the 52-bit
-        # mantissa — hit rows only contribute their hash, so the fill
-        # is never read.  (Found in round 5; the mode's own plan test
-        # now rides a second full-range hash column through the path.)
-        _integral = ("long", "int", "integer", "short", "byte", "bigint", "smallint", "tinyint")
-        null_cols = [
-            (
-                F.lit(0).cast(f.dataType)
-                if f.dataType.simpleString() in _integral
-                else F.lit(None).cast(f.dataType)
-            ).alias(f.name)
-            for f in candidates.schema.fields
-            if f.name != hash_col
-        ]
-        hit_rows = seen_h.select(
-            F.col("h").alias(hash_col),
-            *null_cols,
-            self.bucket_col(F.col("h")).alias("__bucket"),
-            F.lit(1).alias("__hit"),
-        )
-        tagged = cand.withColumn("__hit", F.lit(0)).unionByName(hit_rows)
-        # Delta metadata (segment id + bloom geometry).  With an
-        # explicit next_seg (crawl loops pass the round number) the
-        # geometry is taken from this service — the same instance that
-        # init()ed the state — and the metadata costs ZERO extra jobs
-        # (plain literals).  Without one, a 1-row broadcast crossJoin
-        # derives max(seg)+1 and the stored geometry from a
-        # column-pruned state aggregate (no blob columns read).
-        if next_seg is not None:
-            fresh_ext = (
-                tagged.withColumn("__nseg", F.lit(int(next_seg)).cast("int"))
-                .withColumn("__m", F.lit(m_d).cast("long"))
-                .withColumn("__k", F.lit(k_d).cast("int"))
-            )
-        else:
-            meta = state.agg(
-                (F.coalesce(F.max("seg"), F.lit(-1)) + 1).cast("int").alias("__nseg"),
-                F.coalesce(F.first("m_bits"), F.lit(m_d)).alias("__m"),
-                F.coalesce(F.first("k"), F.lit(k_d)).alias("__k"),
-            )
-            fresh_ext = tagged.crossJoin(F.broadcast(meta))
-
-        def build(key, pdf: pd.DataFrame):
-            bucket = int(key[0])
-            nseg = int(pdf["__nseg"].iloc[0])
-            m = int(pdf["__m"].iloc[0])
-            kk = int(pdf["__k"].iloc[0])
-            hits = np.unique(
-                pdf.loc[pdf["__hit"] == 1, hash_col].to_numpy(dtype=np.int64)
-            )
-            pdf = pdf[pdf["__hit"] == 0].drop(
-                columns=["__bucket", "__nseg", "__m", "__k", "__hit"]
-            )
-            if len(hits) and len(pdf):
-                hs = pdf[hash_col].to_numpy(dtype=np.int64)
-                idx = np.clip(np.searchsorted(hits, hs), 0, len(hits) - 1)
-                pdf = pdf[hits[idx] != hs]
-            if order_cols:
-                pdf = pdf.sort_values([hash_col, *order_cols], kind="mergesort")
-            pdf = pdf.drop_duplicates(subset=[hash_col], keep="first")
-            fhs = np.sort(pdf[hash_col].to_numpy(dtype=np.int64))
-            pdf = pdf.copy()
-            pdf.insert(0, "kind", 0)
-            pdf.insert(1, "bucket", bucket)
-            pdf.insert(2, "seg", None)
-            for c in state_pad:
-                pdf[c] = None
-            if len(fhs) == 0:
-                return pdf[out_cols]
-            delta_bloom = np.zeros((m + 7) // 8, dtype=np.uint8)
-            pos = _positions(fhs, kk, m).ravel()
-            np.bitwise_or.at(delta_bloom, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
-            st_row = {c: [None] for c in cand_cols}
-            st_row.update(
-                kind=[1], bucket=[bucket], seg=[nseg],
-                bloom=[delta_bloom.tobytes()], hashes=[fhs.tobytes()],
-                n_items=[len(fhs)], m_bits=[m], k=[kk],
-            )
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore", FutureWarning)
-                out = pd.concat([pdf, pd.DataFrame(st_row)], ignore_index=True)
-            return out[out_cols]
-
-        return fresh_ext.groupBy("__bucket").applyInPandas(build, schema=out_schema)
 
     @staticmethod
     def split(admitted: DataFrame, cand_cols: list[str]) -> tuple[DataFrame, DataFrame]:

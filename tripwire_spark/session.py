@@ -14,6 +14,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical memory, capped at 48g: the JVM heap must
+    leave room for the Python workers and the OS, or the kernel kills
+    the driver partway through a long session."""
+    try:
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return "4g"
+    return f"{max(1024, min(total_mb // 4, 48 * 1024))}m"
+
+
 def get_spark(
     app_name: str = "tripwire_spark",
     cores: int | None = None,
@@ -24,7 +35,8 @@ def get_spark(
 
     ``cores`` controls local parallelism (``local[cores]``); the bench
     harness uses two levels (e.g. 8 vs 32) to evidence the N->4N scaling
-    criterion from BASELINE.json.
+    criterion from BASELINE.json.  ``SPARK_DRIVER_MEMORY`` overrides the
+    heap size (default: a quarter of physical memory, capped at 48g).
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or int(
@@ -44,7 +56,7 @@ def get_spark(
         # cluster sizes (the N->4N scaling criterion) are biased toward
         # fewer, fatter partitions.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Cached page/state blocks trade memory for CPU: columnar-cache
