@@ -351,11 +351,11 @@ def test_seen_compact_rejects_mixed_geometry(spark):
 
 
 def test_admit_delta_side_preserves_full_range_int64_columns(spark):
-    """Round-5 regression (real bug found in review): null-padded
-    segment rows in the candidate-side exchange float64-upcast the
-    candidates' OTHER int64 columns, silently rounding 64-bit hashes
-    (D2 ck, discovery parent qids) past the 52-bit mantissa — 1491 of
-    1500 companion hashes corrupted in the repro.  Zero-filled now;
+    """Regression: null-padded segment rows in the candidate-side
+    exchange float64-upcast the candidates' OTHER int64 columns,
+    silently rounding 64-bit hashes (D2 ck, discovery parent qids) past
+    the 52-bit mantissa — 1491 of 1500 companion hashes corrupted in
+    the repro.  Zero-filled now;
     this pins byte-exact survival through the delta-side path, where
     every touched bucket's batch mixes segment and candidate rows."""
     from tripwire_spark.operators.seen import SeenState
